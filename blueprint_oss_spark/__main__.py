@@ -209,10 +209,12 @@ def main(argv=None) -> int:
 
   if args.ocr_format:
     if args.ocr_format == 'docjson':
-      out = extract_from_doc_json_files(spark, args.input, root)
+      out = extract_from_doc_json_files(spark, args.input, root,
+                                        doc_time_budget_s=args.timeout)
     else:
       out = extract_from_ocr_files(spark, args.input, root,
-                                   ocr_format=args.ocr_format)
+                                   ocr_format=args.ocr_format,
+                                   doc_time_budget_s=args.timeout)
     out.write.mode('overwrite').parquet(args.output)
     n = spark.read.parquet(args.output).count()
     print(json.dumps({'docs': n, 'output': args.output}))

@@ -6,6 +6,13 @@ lists with exact merge scoring.  The solver returns the *best* extraction —
 the same result as the reference pumped to exhaustion
 (run_model with Config(num_samples=-1), bp/run.py:50-67).
 
+Layout: `leaf_candidates` scores leaves; `bind_node` binds each node type
+to a sorted candidate list; `_bind_combine` is the one pair loop
+(keep-all, or branch-and-bound when only the best is needed), and
+`_merge_pair` executing a `_merge_plan` is the one merge-scoring rule.
+`_rule_score` scores a rule against one assignment; `_bound_fast` is its
+upper bound over cached scores.
+
 Replicated reference quirks (intentional, for output parity):
   * PatternNode flattens connective rules to atoms, so a Disjunction inside
     a pattern behaves conjunctively (bp/tree.py:340-341).
@@ -22,8 +29,7 @@ Replicated reference quirks (intentional, for output parity):
 
 from __future__ import annotations
 
-import itertools
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from functools import reduce
 from typing import Dict, FrozenSet, List, Optional, Sequence, Tuple
 
@@ -31,9 +37,7 @@ from ..model.nodes import (
     CombineNode, EmptyNode, LeafNode, MergeNode, Node, PatternNode,
     PickBestNode, combine, optimize_rule_distribution,
 )
-from ..model.rules import (
-    Atom, Conjunction, Connective, Disjunction, Field, Rule, get_atoms,
-)
+from ..model.rules import Atom, Connective, Disjunction, Field, Rule, get_atoms
 from .docmodel import DocPool
 from .kernels import score_predicate
 
@@ -90,12 +94,6 @@ class SE:
   def is_empty(self) -> bool:
     return not self.assign
 
-  def valid(self) -> bool:
-    for f in self.assign:
-      if not self.field_scores[f] > MINIMUM_FIELD_SCORE:
-        return False
-    return True
-
 
 class _ScoreCache:
   """Per-document (predicate, entity-ids) → score memo.  Scores are pure
@@ -139,8 +137,9 @@ def _rule_score(rule: Rule, assign: Dict[Field, int],
   """Score a rule against an assignment; atoms with missing fields score 1
   (bp/rule.py:249-256, conjunction/disjunction bp/rule.py:306-321)."""
   if isinstance(rule, Atom):
-    if any(f not in assign for f in rule.fields):
-      return 1.0
+    for f in rule.fields:
+      if f not in assign:
+        return 1.0
     return sc.atom_score(rule, tuple(assign[f] for f in rule.fields))
   if isinstance(rule, Disjunction):
     return max(_rule_score(r, assign, sc) for r in rule.rules)
@@ -151,95 +150,13 @@ def _rule_score(rule: Rule, assign: Dict[Field, int],
   return s
 
 
-def _upper_bound(rule: Rule, akeys, cache: Dict[int, float]) -> float:
-  """reference: bp/scoring.py:267-284.  All decidable atoms were already
-  cached by the merge atom pass, so no predicate evaluation happens here —
-  non-decidable atoms bound to 1."""
-  got = cache.get(rule.rid)
-  if got is not None:
-    return got
-  if isinstance(rule, Atom):
-    return 1.0  # decidable atoms are always in the cache
-  if isinstance(rule, Disjunction):
-    subs = [_upper_bound(r, akeys, cache) for r in rule.rules]
-    return max(subs) if subs else 1.0
-  s = 1.0
-  for r in rule.rules:
-    s *= _upper_bound(r, akeys, cache)
-  return s
-
-
-def merge_fast(ses: Sequence[SE], meta: Sequence[_RuleMeta], mass: int,
-               sc: _ScoreCache) -> SE:
-  """Exact replica of bp/scoring.py:217-264 over precomputed rule
-  metadata."""
-  if len(ses) == 2:
-    a, b = ses
-    assign = {**a.assign, **b.assign}
-    rule_scores = {**a.rule_scores, **b.rule_scores}
-    field_scores = {**a.field_scores, **b.field_scores}
-  else:
-    assign = {}
-    field_scores = {}
-    rule_scores = {}
-    for se in ses:
-      assign.update(se.assign)
-      rule_scores.update(se.rule_scores)
-      field_scores.update(se.field_scores)
-  akeys = frozenset(assign)
-
-  # Cache all decidable atoms of all rules (bp/scoring.py:234-237).
-  for m in meta:
-    for atom, afields in m.atoms:
-      if afields <= akeys and atom.rid not in rule_scores:
-        rule_scores[atom.rid] = sc.atom_score(
-            atom, tuple(assign[f] for f in atom.fields))
-
-  decidable = []
-  early_exits = []
-  for m in meta:
-    if m.fields <= akeys:
-      decidable.append(m)
-    elif not m.is_atom:
-      # Early exits BEFORE multiplication (bp/scoring.py:249-251); a
-      # non-decidable Atom always has upper bound 1, so only
-      # connectives can early-exit.
-      if _upper_bound(m.rule, akeys, rule_scores) == 0:
-        early_exits.append(m)
-
-  for m in decidable:
-    rid = m.rule.rid
-    s = rule_scores[rid] if rid in rule_scores \
-        else _rule_score(m.rule, assign, sc)
-    for f in m.rule.fields:
-      if f in assign:
-        field_scores[f] *= s
-    rule_scores[rid] = s
-
-  for m in early_exits:
-    for f in m.rule.fields:
-      if f in assign:
-        field_scores[f] = 0.0
-
-  score = sum(field_scores.values()) / mass
-  return SE(assign, field_scores, rule_scores, mass, score)
-
-
-def merge(ses: Sequence[SE], rules: Sequence[Rule], mass: int,
-          doc: DocPool) -> SE:
-  """Back-compat wrapper building metadata on the fly."""
-  return merge_fast(ses, [_RuleMeta(r) for r in rules], mass,
-                    _ScoreCache(doc))
-
-
 # ---------------------------------------------------------------------------
 # Leaf candidate generation (bp/tree.py:68-96, 228-262).
 # ---------------------------------------------------------------------------
 
 def leaf_candidates(doc: DocPool, etype: str,
                     atom_rules: Sequence[Atom],
-                    memo: Dict, count_only: bool = False) \
-    -> List[Tuple[int, float, Dict[int, float]]]:
+                    memo: Dict) -> List[Tuple[int, float, Dict[int, float]]]:
   """Scored (entity, field_score, atom_scores) candidates of one leaf,
   sorted by score descending (stable), validity-cutoff applied.
 
@@ -375,9 +292,7 @@ def _continue_bind(node: Node, doc: DocPool, memo: Dict,
     b1 = bind_node(node.node1, doc, memo)
     b2 = bind_node(node.node2, doc, memo)
     meta = _rule_meta(node.rules, memo)
-    if not need_all:
-      return _bind_combine_best(b1, b2, meta, node.all_or_nothing, sc)
-    return _bind_combine(b1, b2, meta, node.all_or_nothing, sc)
+    return _bind_combine(b1, b2, meta, node.all_or_nothing, sc, need_all)
 
   if isinstance(node, MergeNode):
     # MergeNode executes as a fresh combine chain; its own spanning rules
@@ -385,34 +300,20 @@ def _continue_bind(node: Node, doc: DocPool, memo: Dict,
     return bind_node(combine(*node.children), doc, memo, need_all)
 
   if isinstance(node, PickBestNode):
-    if not need_all and not node.rules:
-      # Only the best is needed and there are no node rules (rule
-      # pushdown always empties PickBest rules, bp/tree.py:854-858):
-      # renormalization sum(fs)/mass is order-preserving within each
-      # (sorted) child list, so the argmax over children's heads is the
-      # argmax over the whole union — and each child therefore only
-      # needs its own best (need=1 propagates).
-      children = [bind_node(c, doc, memo, need_all=False)
-                  for c in node.children]
-      mass = max(c.mass for c in children)
-      legal = frozenset().union(*(c.legal_fields for c in children))
-      meta = _rule_meta(node.rules, memo)
-      out = []
-      for c in children:
-        if c.cands:
-          out.append(merge_fast([c.cands[0]], meta, mass, sc))
-      out.sort(key=lambda s: -s.score)
-      return Bound(legal, mass, out)
-    children = [bind_node(c, doc, memo) for c in node.children]
+    # Rule pushdown always empties PickBest rules (bp/tree.py:854-858),
+    # so binding only renormalizes: score = sum(field_scores) / mass.
+    # That is order-preserving within each (sorted) child list, so when
+    # only the best is needed each child contributes just its head.
+    if node.rules:
+      raise ValueError('PickBestNode rules must be pushed down first '
+                       '(optimize_rule_distribution)')
+    children = [bind_node(c, doc, memo, need_all) for c in node.children]
     mass = max(c.mass for c in children)
     legal = frozenset().union(*(c.legal_fields for c in children))
-    meta = _rule_meta(node.rules, memo)
-    out = []
-    for c in children:
-      for se in c.cands:
-        m = merge_fast([se], meta, mass, sc)
-        if m.valid():
-          out.append(m)
+    out = [SE(se.assign, se.field_scores, se.rule_scores, mass,
+              sum(se.field_scores.values()) / mass)
+           for c in children
+           for se in (c.cands if need_all else c.cands[:1])]
     out.sort(key=lambda s: -s.score)
     return Bound(legal, mass, out)
 
@@ -425,15 +326,14 @@ def _continue_bind(node: Node, doc: DocPool, memo: Dict,
 def _merge_plan(meta: Sequence[_RuleMeta], akeys: FrozenSet[Field],
                 bkeys: FrozenSet[Field]) -> List[tuple]:
   """Precompute, for one (assigned-fields-of-a, assigned-fields-of-b)
-  bucket, exactly the work _merge_pair does per pair: which rules are
+  bucket, the pair-invariant part of _merge_pair: which rules are
   decidable, which side supplies each atom field, which undecidable
   connectives get their decidable atoms cached + an upper-bound check.
   Candidate lists contain only a handful of distinct assigned-field sets
   (full or empty under all_or_nothing), so this hoists the per-pair
-  field-membership scans out of the O(|a|·|b|) loop.  Semantics are
-  byte-identical to the original fused merge (bp/scoring.py:217-264):
-  ops execute in meta order, preserving the extra-atom-cache
-  accumulation the upper bound sees."""
+  field-membership scans out of the O(|a|·|b|) loop.  Ops keep meta
+  order, preserving the extra-atom-cache accumulation the upper bound
+  sees."""
   union = akeys | bkeys
   plan: List[tuple] = []
   for m in meta:
@@ -451,19 +351,25 @@ def _merge_plan(meta: Sequence[_RuleMeta], akeys: FrozenSet[Field],
   return plan
 
 
-def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
-                        sc: _ScoreCache) -> Optional[SE]:
-  """_merge_pair with the bucket-invariant work precomputed by
-  _merge_plan.  See _merge_pair for the semantics contract."""
+def _merge_pair(a: SE, b: SE, plan: Sequence[tuple], mass: int,
+                sc: _ScoreCache) -> Optional[SE]:
+  """Merge two extractions under a node's rules (bp/scoring.py:217-264),
+  executing the _merge_plan of the pair's bucket.
+
+  The output dicts are built only when the pair survives.  A surviving
+  pair scores exactly as the reference merge; a pair returns None
+  exactly when the reference merge would produce an invalid extraction:
+  a decidable rule scored 0, a 0-upper-bound early exit touched an
+  assigned field, or a field score fell to <= MINIMUM_FIELD_SCORE.
+  Decidable connectives are recomputed from their atoms, as the
+  reference does (bp/scoring.py:243-247)."""
   a_assign = a.assign
   b_assign = b.assign
   a_rs = a.rule_scores
   b_rs = b.rule_scores
 
   decidable: List = []
-  # incremental dict (insertion-ordered like the former pair list);
-  # _bound_fast only READS it, so sharing one growing dict across ops
-  # is behavior-identical to rebuilding dict(pairs) per op
+  # one growing dict shared across ops: _bound_fast only reads it
   extra_atom_scores: Dict[int, float] = {}
 
   for op in plan:
@@ -477,7 +383,7 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
           s = sc.atom_score(rule, tuple(
               a_assign[f] if fa else b_assign[f] for fa, f in src))
         else:
-          s = _connective_score(rule, a_assign, b_assign, sc)
+          s = _rule_score(rule, {**a_assign, **b_assign}, sc)
         extra_atom_scores[rid] = s
       if s == 0.0:
         return None
@@ -492,8 +398,7 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
           s = sc.atom_score(atom, tuple(
               a_assign[f] if fa else b_assign[f] for fa, f in src))
         extra_atom_scores[rid] = s
-      bound = _bound_fast(m.rule, a_assign, b_assign, a_rs, b_rs,
-                          extra_atom_scores)
+      bound = _bound_fast(m.rule, a_rs, b_rs, extra_atom_scores)
       if bound == 0.0 and touches:
         return None
 
@@ -519,122 +424,9 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
   return SE(assign, field_scores, rule_scores, mass, score)
 
 
-def _merge_pair(a: SE, b: SE, meta: Sequence[_RuleMeta], mass: int,
-                sc: _ScoreCache) -> Optional[SE]:
-  """Fused 2-way merge: one metadata scan; the output dicts are built
-  only when the pair survives.  Exactly bp/scoring.py:217-264 for pairs
-  that survive; pairs returning None are exactly the ones merge would
-  produce as invalid (a decidable rule scored 0, a 0-upper-bound early
-  exit touched an assigned field, or a field score fell to ≤ 0.1)."""
-  a_assign = a.assign
-  b_assign = b.assign
-  a_rs = a.rule_scores
-  b_rs = b.rule_scores
-
-  decidable: List = []       # (_RuleMeta, score)
-  early_exit_meta: List = []
-  extra_atom_scores: List = []  # (rid, score) cached-atom pass results
-
-  for m in meta:
-    decid = True
-    for f in m.rule.fields:
-      if f not in a_assign and f not in b_assign:
-        decid = False
-        break
-    if decid:
-      rid = m.rule.rid
-      s = a_rs.get(rid)
-      if s is None:
-        s = b_rs.get(rid)
-      if s is None:
-        if m.is_atom:
-          atom = m.rule
-          s = sc.atom_score(atom, tuple(
-              a_assign[f] if f in a_assign else b_assign[f]
-              for f in atom.fields))
-          extra_atom_scores.append((rid, s))
-        else:
-          # connective: recompute from atoms (reference recomputes too,
-          # bp/scoring.py:243-247 TODO note)
-          s = _connective_score(m.rule, a_assign, b_assign, sc)
-          extra_atom_scores.append((rid, s))
-      if s == 0.0:
-        return None  # zeroes an assigned field → invalid
-      decidable.append((m, s))
-    else:
-      if not m.is_atom:
-        # early exit check (bp/scoring.py:249-261); cache decidable
-        # atoms of this rule first, as the reference's atom pass does
-        bound = 1.0
-        for atom, afields in m.atoms:
-          ok = True
-          for f in atom.fields:
-            if f not in a_assign and f not in b_assign:
-              ok = False
-              break
-          if ok:
-            rid = atom.rid
-            s = a_rs.get(rid)
-            if s is None:
-              s = b_rs.get(rid)
-            if s is None:
-              s = sc.atom_score(atom, tuple(
-                  a_assign[f] if f in a_assign else b_assign[f]
-                  for f in atom.fields))
-            extra_atom_scores.append((rid, s))
-        bound = _bound_fast(m.rule, a_assign, b_assign, a_rs, b_rs,
-                            dict(extra_atom_scores))
-        if bound == 0.0:
-          touches = any(f in a_assign or f in b_assign
-                        for f in m.rule.fields)
-          if touches:
-            return None
-          early_exit_meta.append(m)
-
-  field_scores = {**a.field_scores, **b.field_scores}
-  for (m, s) in decidable:
-    if s != 1.0:
-      for f in m.rule.fields:
-        if f in a_assign or f in b_assign:
-          field_scores[f] *= s
-
-  assign = {**a_assign, **b_assign}
-  for f in assign:
-    if not field_scores[f] > MINIMUM_FIELD_SCORE:
-      return None
-
-  rule_scores = {**a_rs, **b_rs}
-  for rid, s in extra_atom_scores:
-    if rid not in rule_scores:
-      rule_scores[rid] = s
-  for (m, s) in decidable:
-    rule_scores[m.rule.rid] = s
-
-  score = sum(field_scores.values()) / mass
-  return SE(assign, field_scores, rule_scores, mass, score)
-
-
-def _connective_score(rule: Rule, a_assign: Dict[Field, int],
-                      b_assign: Dict[Field, int], sc: _ScoreCache) \
-    -> float:
-  if isinstance(rule, Atom):
-    for f in rule.fields:
-      if f not in a_assign and f not in b_assign:
-        return 1.0
-    return sc.atom_score(rule, tuple(
-        a_assign[f] if f in a_assign else b_assign[f]
-        for f in rule.fields))
-  if isinstance(rule, Disjunction):
-    return max(_connective_score(r, a_assign, b_assign, sc)
-               for r in rule.rules)
-  s = 1.0
-  for r in rule.rules:
-    s *= _connective_score(r, a_assign, b_assign, sc)
-  return s
-
-
-def _bound_fast(rule: Rule, a_assign, b_assign, a_rs, b_rs,
-                extra: Dict[int, float]) -> float:
+def _bound_fast(rule: Rule, a_rs, b_rs, extra: Dict[int, float]) -> float:
+  """Upper bound of a rule's score (bp/scoring.py:267-284).  Every
+  decidable atom is already cached, so undecided atoms bound to 1."""
   got = extra.get(rule.rid)
   if got is None:
     got = a_rs.get(rule.rid)
@@ -643,39 +435,44 @@ def _bound_fast(rule: Rule, a_assign, b_assign, a_rs, b_rs,
   if got is not None:
     return got
   if isinstance(rule, Atom):
-    return 1.0  # decidable atoms were cached above
+    return 1.0
   if isinstance(rule, Disjunction):
-    subs = [_bound_fast(r, a_assign, b_assign, a_rs, b_rs, extra)
-            for r in rule.rules]
+    subs = [_bound_fast(r, a_rs, b_rs, extra) for r in rule.rules]
     return max(subs) if subs else 1.0
   s = 1.0
   for r in rule.rules:
-    s *= _bound_fast(r, a_assign, b_assign, a_rs, b_rs, extra)
+    s *= _bound_fast(r, a_rs, b_rs, extra)
   return s
 
 
-def _bind_combine_best(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
-                       all_or_nothing: bool, sc: _ScoreCache) -> Bound:
-  """Exact best-only combine via branch-and-bound over the sorted child
-  lists.  The merged score is bounded by
+def _bind_combine(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
+                  all_or_nothing: bool, sc: _ScoreCache,
+                  need_all: bool) -> Bound:
+  """All merged pairs of the two sorted child lists, sorted descending
+  (stable, so ties keep (i, j) order) — or, when only the best is
+  needed, that list's head via branch-and-bound.  The merged score is
+  bounded by
       (a.score·a.mass + b.score·b.mass) / mass
   since node rules only multiply field scores by values ≤ 1, so pairs
   whose bound cannot exceed the best-so-far are skipped.  Pairs are
-  visited in the materializing path's (i, j) order with strictly-better
-  replacement, so the tie-winner is identical to sorting the full list
-  and taking the head."""
+  visited in (i, j) order with strictly-better replacement, so the
+  tie-winner is the materialized list's head."""
   legal = b1.legal_fields | b2.legal_fields
   mass = b1.mass + b2.mass
+  if need_all and len(b1.cands) * len(b2.cands) > MAX_PAIRS_PER_COMBINE:
+    raise SolverBudgetError(
+        f'combine product {len(b1.cands)}x{len(b2.cands)} exceeds budget')
   gate_aon = all_or_nothing and b1.legal_fields and b2.legal_fields
   n_legal = len(legal)
   m1, m2 = b1.mass, b2.mass
   bkeys_of = [frozenset(b.assign) for b in b2.cands]
   plans: Dict[Tuple[FrozenSet[Field], FrozenSet[Field]], List[tuple]] = {}
-  best: Optional[SE] = None
+  out: List[SE] = []
+  best: Optional[SE] = None  # best-only: the running best
   for a in b1.cands:
     _check_deadline()
     a_sum = a.score * m1
-    if best is not None and b2.cands \
+    if best is not None \
         and (a_sum + b2.cands[0].score * m2) / mass <= best.score:
       break  # b1 sorted desc → no later a can beat best either
     a_assign = a.assign
@@ -687,46 +484,6 @@ def _bind_combine_best(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
           and (a_sum + b.score * m2) / mass <= best.score:
         break  # b2 sorted desc
       if gate_aon:
-        if a_empty != (not b.assign):
-          continue
-        if not a_empty and na + len(b.assign) != n_legal:
-          continue
-      pkey = (akeys, bkeys_of[j])
-      plan = plans.get(pkey)
-      if plan is None:
-        plan = _merge_plan(meta, akeys, bkeys_of[j])
-        plans[pkey] = plan
-      m = _merge_pair_planned(a, b, plan, mass, sc)
-      if m is None:
-        continue
-      if all_or_nothing and not m.is_empty \
-          and len(m.assign) != n_legal:
-        continue
-      if best is None or m.score > best.score:
-        best = m
-  return Bound(legal, mass, [best] if best is not None else [])
-
-
-def _bind_combine(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
-                  all_or_nothing: bool, sc: _ScoreCache) -> Bound:
-  legal = b1.legal_fields | b2.legal_fields
-  mass = b1.mass + b2.mass
-  if len(b1.cands) * len(b2.cands) > MAX_PAIRS_PER_COMBINE:
-    raise SolverBudgetError(
-        f'combine product {len(b1.cands)}x{len(b2.cands)} exceeds budget')
-  gate_aon = all_or_nothing and b1.legal_fields and b2.legal_fields
-  n_legal = len(legal)
-  bkeys_of = [frozenset(b.assign) for b in b2.cands]
-  plans: Dict[Tuple[FrozenSet[Field], FrozenSet[Field]], List[tuple]] = {}
-  out: List[SE] = []
-  for a in b1.cands:
-    _check_deadline()
-    a_assign = a.assign
-    a_empty = not a_assign
-    na = len(a_assign)
-    akeys = frozenset(a_assign)
-    for j, b in enumerate(b2.cands):
-      if gate_aon:
         # full-or-empty gate before any scoring work
         if a_empty != (not b.assign):
           continue
@@ -737,14 +494,19 @@ def _bind_combine(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
       if plan is None:
         plan = _merge_plan(meta, akeys, bkeys_of[j])
         plans[pkey] = plan
-      m = _merge_pair_planned(a, b, plan, mass, sc)
+      m = _merge_pair(a, b, plan, mass, sc)
       if m is None:
         continue
       if all_or_nothing and not m.is_empty \
           and len(m.assign) != n_legal:
         continue
-      out.append(m)
-  out.sort(key=lambda s: -s.score)  # stable; ties keep (i, j) order
+      if need_all:
+        out.append(m)
+      elif best is None or m.score > best.score:
+        best = m
+  if not need_all:
+    return Bound(legal, mass, [best] if best is not None else [])
+  out.sort(key=lambda s: -s.score)
   return Bound(legal, mass, out)
 
 

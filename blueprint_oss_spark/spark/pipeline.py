@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pickle
 import time
-from typing import Iterable, Iterator, List, Optional
+from typing import Callable, Iterator, List, Optional
 
 import pandas as pd
 
@@ -101,6 +101,39 @@ def tree_from_payload(payload: bytes) -> Node:
   return tree
 
 
+def contained_row(doc_id, doc_time_budget_s: float, solve: Callable,
+                  *args) -> dict:
+  """One OUTPUT_SCHEMA row for one document: `solve(*args)` returns the
+  result columns, run under a per-document deadline.  Any failure is
+  contained as the row's `error` — `budget: …`, `timeout`,
+  `malformed: …` or, for anything unforeseen, `error: <type>: …` — so
+  one bad document never fails the task."""
+  t0 = time.monotonic()
+  row = {
+      'doc_id': doc_id, 'out_spans': [], 'fields': {},
+      'score': 0.0, 'n_entities': 0, 'n_words': 0, 'error': None,
+      'elapsed_ms': 0.0,
+  }
+  try:
+    solver_mod.set_deadline(t0 + doc_time_budget_s)
+    row.update(solve(*args))
+  except solver_mod.SolverBudgetError as e:
+    row['error'] = f'budget: {e}'
+  except solver_mod.SolverTimeoutError:
+    row['error'] = 'timeout'
+  except _MalformedDoc as e:
+    row['error'] = f'malformed: {e}'
+  except Exception as e:  # noqa: BLE001 — last-resort containment
+    # Unknown per-doc failure: record and continue.  A 90-hour
+    # 1000-executor run must not die on doc 10^11's quirk; the error
+    # column is the triage surface.
+    row['error'] = f'error: {type(e).__name__}: {e}'
+  finally:
+    solver_mod.set_deadline(None)
+  row['elapsed_ms'] = (time.monotonic() - t0) * 1000.0
+  return row
+
+
 def extract_documents(df: DataFrame, root: Node, *,
                       doc_time_budget_s: float = 45.0,
                       max_spans_per_doc: int = 200_000,
@@ -130,59 +163,38 @@ def extract_documents(df: DataFrame, root: Node, *,
           .repartition(n, F.col('_sz'), F.col('_salt'))
           .drop('_sz', '_salt'))
 
+  def solve(doc_id, spans, tree) -> dict:
+    # Malformed-row containment: at 10^12 docs a single null spans
+    # array / null struct field must yield an error ROW, never an
+    # executor task failure that kills the whole job.
+    if doc_id is None:
+      raise _MalformedDoc('null doc_id')
+    if spans is None or isinstance(spans, float):
+      raise _MalformedDoc('null spans array')
+    if len(spans) > max_spans_per_doc:
+      raise solver_mod.SolverBudgetError(
+          f'{len(spans)} spans exceeds max_spans_per_doc')
+    span_rows = []
+    for s in spans:
+      if s is None or s['kind'] is None or s['offset'] is None:
+        raise _MalformedDoc(f'null span struct/kind/offset: {s}')
+      # null text / media_ref are normal at scale (media spans carry no
+      # text; text spans no media) — normalize to ''
+      span_rows.append((s['kind'], s['text'] or '',
+                        s['media_ref'] or '', int(s['offset'])))
+    r = run_doc(str(doc_id), span_rows, tree, pre_optimized=True)
+    return {'out_spans': [{'kind': k, 'text': t, 'media_ref': m,
+                           'order': o} for (k, t, m, o) in r['out_spans']],
+            'fields': r['fields'], 'score': r['score'],
+            'n_entities': r['n_entities'], 'n_words': r['n_words']}
+
   def run_batches(batches: Iterator[pd.DataFrame]) \
       -> Iterator[pd.DataFrame]:
     tree = tree_from_payload(bc.value)
     for pdf in batches:
-      out: List[dict] = []
-      for doc_id, spans in zip(pdf['doc_id'], pdf['spans']):
-        t0 = time.monotonic()
-        row = {
-            'doc_id': doc_id, 'out_spans': [], 'fields': {},
-            'score': 0.0, 'n_entities': 0, 'n_words': 0, 'error': None,
-            'elapsed_ms': 0.0,
-        }
-        try:
-          # Malformed-row containment: at 10^12 docs a single null
-          # spans array / null struct field must yield an error ROW,
-          # never an executor task failure that kills the whole job.
-          if doc_id is None:
-            raise _MalformedDoc('null doc_id')
-          if spans is None or isinstance(spans, float):
-            raise _MalformedDoc('null spans array')
-          if len(spans) > max_spans_per_doc:
-            raise solver_mod.SolverBudgetError(
-                f'{len(spans)} spans exceeds max_spans_per_doc')
-          solver_mod.set_deadline(t0 + doc_time_budget_s)
-          span_rows = []
-          for s in spans:
-            if s is None or s['kind'] is None or s['offset'] is None:
-              raise _MalformedDoc(f'null span struct/kind/offset: {s}')
-            # null text / media_ref are normal at scale (media spans
-            # carry no text; text spans no media) — normalize to ''
-            span_rows.append((s['kind'], s['text'] or '',
-                              s['media_ref'] or '', int(s['offset'])))
-          r = run_doc(str(doc_id), span_rows, tree, pre_optimized=True)
-          row.update(
-              out_spans=[{'kind': k, 'text': t, 'media_ref': m,
-                          'order': o} for (k, t, m, o) in r['out_spans']],
-              fields=r['fields'], score=r['score'],
-              n_entities=r['n_entities'], n_words=r['n_words'])
-        except solver_mod.SolverBudgetError as e:
-          row['error'] = f'budget: {e}'
-        except solver_mod.SolverTimeoutError:
-          row['error'] = 'timeout'
-        except _MalformedDoc as e:
-          row['error'] = f'malformed: {e}'
-        except Exception as e:  # noqa: BLE001 — last-resort containment
-          # Unknown per-doc failure: record and continue.  A 90-hour
-          # 1000-executor run must not die on doc 10^11's quirk; the
-          # error column is the triage surface.
-          row['error'] = f'error: {type(e).__name__}: {e}'
-        finally:
-          solver_mod.set_deadline(None)
-        row['elapsed_ms'] = (time.monotonic() - t0) * 1000.0
-        out.append(row)
+      out = [contained_row(doc_id, doc_time_budget_s, solve,
+                           doc_id, spans, tree)
+             for doc_id, spans in zip(pdf['doc_id'], pdf['spans'])]
       yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA])
 
   return df.mapInPandas(run_batches, OUTPUT_SCHEMA)

@@ -23,6 +23,10 @@ from typing import Any, Dict, Iterator, List, Optional
 
 import pandas as pd
 
+from ..engine.doc_json import pool_from_doc_json
+from ..engine.entity_gen import build_doc_pool
+from ..engine.solver import best_extraction
+
 
 def parse_google_ocr(raw: Dict[str, Any]) -> List[dict]:
   pages = []
@@ -171,7 +175,8 @@ PARSERS = {
 
 
 def extract_from_ocr_files(spark, path_glob: str, root, *,
-                           ocr_format: str = 'google'):
+                           ocr_format: str = 'google',
+                           doc_time_budget_s: float = 45.0):
   """Bulk extraction over a collection of OCR files: binaryFile scan →
   mapInPandas(parse + solve).  Same zero-shuffle shape as the spans
   pipeline; the `content` column stays inside Arrow buffers until the
@@ -179,30 +184,35 @@ def extract_from_ocr_files(spark, path_glob: str, root, *,
   parser = PARSERS[ocr_format]
 
   def pool_builder(doc_id: str, content: bytes):
-    from ..engine.entity_gen import build_doc_pool
     return build_doc_pool(doc_id, parser(content))
 
-  return _extract_files(spark, path_glob, root, pool_builder)
+  return _extract_files(spark, path_glob, root, pool_builder,
+                        doc_time_budget_s)
 
 
-def extract_from_doc_json_files(spark, path_glob: str, root):
+def extract_from_doc_json_files(spark, path_glob: str, root, *,
+                                doc_time_budget_s: float = 45.0):
   """Bulk extraction over reference-format Document JSON files
   (bp/document.py:188-207 round-trip format): binaryFile scan →
   mapInPandas(load pool + solve), zero-shuffle."""
 
   def pool_builder(doc_id: str, content: bytes):
-    from ..engine.doc_json import pool_from_doc_json
     pool = pool_from_doc_json(json.loads(content.decode('utf-8')))
     pool.name = doc_id
     return pool
 
-  return _extract_files(spark, path_glob, root, pool_builder)
+  return _extract_files(spark, path_glob, root, pool_builder,
+                        doc_time_budget_s)
 
 
-def _extract_files(spark, path_glob: str, root, pool_builder):
-  import pickle
-
-  from .pipeline import OUTPUT_SCHEMA, compile_blueprint
+def _extract_files(spark, path_glob: str, root, pool_builder,
+                   doc_time_budget_s: float):
+  """One output row per file, with the per-document deadline and error
+  rows of `extract_documents` (a file that does not parse becomes a
+  `malformed:` row)."""
+  from .pipeline import (
+      OUTPUT_SCHEMA, _MalformedDoc, compile_blueprint, contained_row,
+      tree_from_payload)
 
   payload = compile_blueprint(root)
   bc = spark.sparkContext.broadcast(payload)
@@ -210,33 +220,27 @@ def _extract_files(spark, path_glob: str, root, pool_builder):
   df = (spark.read.format('binaryFile').load(path_glob)
         .select('path', 'content'))
 
+  def solve(doc_id: str, content: bytes, tree) -> dict:
+    try:
+      pool = pool_builder(doc_id, content)
+    except (ValueError, KeyError, IndexError, TypeError) as e:
+      raise _MalformedDoc(f'{type(e).__name__}: {e}') from e
+    assign, _, score = best_extraction(tree, pool, pre_optimized=True)
+    fields = {f: pool.etext[e] for f, e in assign.items()}
+    return {'out_spans': [{'kind': 'text', 'text': fields[f],
+                           'media_ref': '', 'order': i}
+                          for i, f in enumerate(sorted(fields))],
+            'fields': fields, 'score': float(score),
+            'n_entities': pool.n_entities, 'n_words': pool.n_words}
+
   def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..engine.solver import best_extraction
-    from .pipeline import tree_from_payload
     tree = tree_from_payload(bc.value)
     for pdf in batches:
       rows = []
       for path, content in zip(pdf['path'], pdf['content']):
-        import time as _time
-        t0 = _time.monotonic()
         doc_id = path.rsplit('/', 1)[-1]
-        row = {'doc_id': doc_id, 'out_spans': [], 'fields': {},
-               'score': 0.0, 'n_entities': 0, 'n_words': 0,
-               'error': None, 'elapsed_ms': 0.0}
-        try:
-          pool = pool_builder(doc_id, bytes(content))
-          assign, _, score = best_extraction(tree, pool)
-          fields = {f: pool.etext[e] for f, e in assign.items()}
-          row.update(
-              out_spans=[{'kind': 'text', 'text': fields[f],
-                          'media_ref': '', 'order': i}
-                         for i, f in enumerate(sorted(fields))],
-              fields=fields, score=float(score),
-              n_entities=pool.n_entities, n_words=pool.n_words)
-        except Exception as e:  # noqa: BLE001 — per-doc isolation
-          row['error'] = f'{type(e).__name__}: {e}'
-        row['elapsed_ms'] = (_time.monotonic() - t0) * 1000.0
-        rows.append(row)
+        rows.append(contained_row(doc_id, doc_time_budget_s, solve,
+                                  doc_id, bytes(content), tree))
       yield pd.DataFrame(rows, columns=[f.name for f in OUTPUT_SCHEMA])
 
   return df.mapInPandas(run, OUTPUT_SCHEMA)

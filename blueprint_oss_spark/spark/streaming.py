@@ -424,28 +424,6 @@ def sessionized_doc_activity(out_stream: DataFrame, *,
                .alias('errors')))
 
 
-def start_main_content_stream(spark: SparkSession, input_dir: str,
-                              output_dir: str, checkpoint_dir: str, *,
-                              trigger_once: bool = False
-                              ) -> StreamingQuery:
-  """Streaming main-content extraction (north-rule pipeline as a
-  continuous job): readStream over interleaved spans files →
-  main_content_from_spans (stateless mapInPandas, streaming-safe) →
-  checkpointed parquet sink.  Restarting with the same checkpoint
-  resumes exactly-once, the streaming twin of run_extraction_job's
-  batch lineage."""
-  from ..ops.html_extract import main_content_from_spans
-  out = main_content_from_spans(read_span_stream(spark, input_dir))
-  writer = (out.writeStream
-            .format('parquet')
-            .option('path', output_dir)
-            .option('checkpointLocation', checkpoint_dir)
-            .outputMode('append'))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
-
-
 def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
                                    corpus: DataFrame, output_dir: str,
                                    checkpoint_dir: str, *,

@@ -98,3 +98,34 @@ def test_malformed_rows_become_error_rows(spark):
   assert nt['error'] is None
   assert [s['kind'] for s in nt['out_spans']] == ['media']
   assert nt['out_spans'][0]['media_ref'] == 'm://1'
+
+
+def test_doc_json_source_time_budget_isolates_slow_doc(spark, tmp_path):
+  """The file sources share the spans pipeline's per-document deadline:
+  a slow doc JSON file becomes a `timeout` row, its neighbours and a
+  file that does not parse are rows of their own."""
+  import json
+
+  from blueprint_oss_spark.engine.doc_json import doc_json_from_pool
+  from blueprint_oss_spark.engine.entity_gen import build_doc_pool
+  from blueprint_oss_spark.engine.runner import spans_to_pages
+  from blueprint_oss_spark.spark.sources import extract_from_doc_json_files
+
+  docs = readme_corpus(4, seed=787)
+  whale = ('whale', _inflate(docs[0][1], 120))
+  for doc_id, spans in docs + [whale]:
+    pool = build_doc_pool(doc_id, spans_to_pages(spans))
+    (tmp_path / f'{doc_id}.json').write_text(
+        json.dumps(doc_json_from_pool(pool)))
+  (tmp_path / 'truncated.json').write_text('{"pages": [')
+
+  out = {r['doc_id'].removesuffix('.json'): r
+         for r in extract_from_doc_json_files(
+             spark, str(tmp_path / '*.json'), readme_blueprint(),
+             doc_time_budget_s=0.02).collect()}
+  assert len(out) == len(docs) + 2
+  assert out['whale']['error'] == 'timeout'
+  assert out['whale']['score'] == 0.0
+  assert out['truncated']['error'].startswith('malformed:')
+  for d, _ in docs:
+    assert out[d]['error'] is None, out[d]
